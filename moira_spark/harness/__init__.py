@@ -115,7 +115,7 @@ EXTERNALLY_PROVEN: frozenset[str] = frozenset(
         # both hash-green for every name here)
         "events_asof_join", "shard_packing", "dedup_jaccard_capped",
         "dedup_incremental", "doc_span_dedup", "streaming_session_windows",
-        "corpus_near_dedup", "dedup_cluster_bigstar",
+        "corpus_near_dedup",
     }
 )
 
@@ -255,13 +255,12 @@ _PRIORITY: tuple[str, ...] = (
     # cover: embedding_ann_recall — in-window, floor-gated — exercises the
     # same LSH-banded embedding bucket join every round)
     # (dedup_cluster_representatives rotated out late round 5: 3x green
-    # r2-r4, and the in-window bigstar twin is checked against the SAME
-    # DuckDB recursive-CTE closure oracle)
-    # (dedup_incremental, doc_span_dedup, dedup_cluster_bigstar and
-    # corpus_near_dedup rotated out round 6: all 2x green r4+r5.  The last
-    # two seats go to the new round-6 queries: the batch->MERGE->changelog
-    # CDC round trip, SQL-checked against a DuckDB-computed diff, and the
-    # full lifecycle composition chain, hard-fail rows-only)
+    # r2-r4)
+    # (dedup_incremental, doc_span_dedup and corpus_near_dedup rotated out
+    # round 6: all 2x green r4+r5.  The last two seats go to the new
+    # round-6 queries: the batch->MERGE->changelog CDC round trip,
+    # SQL-checked against a DuckDB-computed diff, and the full lifecycle
+    # composition chain, hard-fail rows-only)
     "table_changes_cdc",
     "table_lifecycle_compose",
     "dedup_incremental_minhash",

@@ -910,26 +910,24 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"refusing all-pairs join over {n} vectors — run "
             f"dedup_embedding_lsh for the bucketed scale path"
         )
-    # per-row norms precomputed pre-join; dots unrolled (bit-equal — see
-    # similarity._dot and embedding_cosine_topk)
+    # per-row norms precomputed pre-join (bit-equal — see similarity._dot
+    # and embedding_cosine_topk)
     a = corpus.select(
         F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"),
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("na"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("na"),
     )
     b = corpus.select(
         F.col("vec_id").alias("vec_b"),
         F.col("v").alias("vb"),
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("nb"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nb"),
     )
     # The nested-loop stream side inherits the tiny scan's partitioning
     # (1-2 tasks), serializing the O(n^2) compare onto one core; spread
     # it before the join (r7.3 — ~200k-row shuffle at the gate's cap,
     # nothing at scale because this baseline refuses corpus-sized input).
     a = a.repartition(2 * spark.sparkContext.defaultParallelism)
-    cos = _dot(F.col("va"), F.col("vb"), dim=_EMB_DIM) / (
-        F.col("na") * F.col("nb")
-    )
+    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     # Two-stage threshold (r7.3): the final predicate round(cos,6) >= thr
     # used to be pushed INTO the join condition, so every candidate pair
     # paid Spark's decimal-exact round — BigDecimal.valueOf(
@@ -974,7 +972,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed = corpus.select(
         "vec_id",
         "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("nv"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nv"),
         sigs_of(F.col("v")).alias("sigs"),
     ).persist()  # both self-join sides read this: one UDF pass
     buckets = signed.select(
@@ -999,10 +997,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["vec_a", "vec_b"])
     )
     # norms ride the bucket rows (computed once per vector in the persisted
-    # frame); pair cost is one unrolled dot
-    cos = _dot(F.col("va"), F.col("vb"), dim=_EMB_DIM) / (
-        F.col("na") * F.col("nb")
-    )
+    # frame); pair cost is one dot fold
+    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         cand.withColumn("cos_sim", F.round(cos, 6))
         .filter(F.col("cos_sim") >= _EMB_DUP_THRESHOLD)
@@ -1017,7 +1013,6 @@ _EMB_DIM = 64
 def semantic_dedup_flags(
     corpus: DataFrame,
     threshold: float = _EMB_DUP_THRESHOLD,
-    dim: "int | None" = None,
 ) -> DataFrame:
     """SemDeDup core over a (vec_id, label, v: array<double>) frame:
     nearest-centroid cluster assignment (centroids = exact fixed-point
@@ -1059,14 +1054,10 @@ def semantic_dedup_flags(
     # sqrt(dot(x, x)) is the identical double either way, but evaluating it
     # inside the pair join would run the 64-element fold three times per
     # candidate pair (measured 3x the bench cost at sf0.1).
-    normed = corpus.withColumn(
-        "nv", F.sqrt(_dot(F.col("v"), F.col("v"), dim=dim))
-    )
-    cent_n = cent.withColumn(
-        "nc", F.sqrt(_dot(F.col("c"), F.col("c"), dim=dim))
-    )
+    normed = corpus.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    cent_n = cent.withColumn("nc", F.sqrt(_dot(F.col("c"), F.col("c"))))
     cos_c = F.round(
-        _dot(F.col("v"), F.col("c"), dim=dim) / (F.col("nv") * F.col("nc")), 6
+        _dot(F.col("v"), F.col("c")) / (F.col("nv") * F.col("nc")), 6
     )
     # argmax via max(struct(cos, -label)): max cosine, then min label on
     # ties — one partial-aggregating groupBy, no window fan-out.
@@ -1086,14 +1077,13 @@ def semantic_dedup_flags(
     clustered = assign.join(normed, "vec_id").select(
         "vec_id", "cluster", "v", "nv"
     )
-    return intra_cluster_prune(clustered, threshold, dim=dim)
+    return intra_cluster_prune(clustered, threshold)
 
 
 def intra_cluster_prune(
     clustered: DataFrame,
     threshold: float = _EMB_DUP_THRESHOLD,
     max_cluster: "int | None" = None,
-    dim: "int | None" = None,
 ) -> DataFrame:
     """SemDeDup prune stage over a (vec_id, cluster, v, nv) frame: flag a
     vector dup when an earlier same-cluster vector sits at cosine >=
@@ -1335,7 +1325,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.unionAll(dup).select(
         "vec_id", "label", _dbl("embedding").alias("v")
     )
-    return semantic_dedup_flags(corpus, dim=_EMB_DIM)
+    return semantic_dedup_flags(corpus)
 
 
 @register("dedup_semantic_kmeans", None)  # iterative clusters: rows + floor
@@ -1366,13 +1356,11 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "cluster",
         "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"), dim=_EMB_DIM)).alias("nv"),
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nv"),
     )
     # checkpoint the (small) flag frame so the floor's count() below and
     # the caller's collect don't each re-execute the pair join
-    out = intra_cluster_prune(clustered, dim=_EMB_DIM).localCheckpoint(
-        eager=True
-    )
+    out = intra_cluster_prune(clustered).localCheckpoint(eager=True)
 
     # Hard floor: planted exact copies cannot escape their source's
     # cluster, so each must carry the dup flag.
@@ -1410,31 +1398,14 @@ _CLUSTER_SQL = f"""
     """
 
 
-def _cluster_output(comp):
-    """(id, comp) labels -> the shared cluster-representatives schema: one
-    row per doc with its component, representative flag (min doc_id wins),
-    and component size.  Single definition for both closure algorithms so
-    the representative-selection rule can never diverge between them."""
-    # component count approaches corpus cardinality when duplication is
-    # sparse — equi-join unhinted, AQE broadcasts when actually small
-    csize = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("n_members"))
-    return comp.join(csize, "comp").select(
-        F.col("id").alias("doc_id"),
-        F.col("comp").alias("component"),
-        (F.col("id") == F.col("comp")).alias("is_representative"),
-        "n_members",
-    )
-
-
 @register("dedup_cluster_representatives", _CLUSTER_SQL)
 def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close near-dup PAIRS into CLUSTERS and pick one representative each —
     the step that turns candidate pairs into an actual dedup decision (if
     A~B and B~C, exactly one of {{A,B,C}} survives, not two).
 
-    Spark side: iterative min-label propagation in DataFrame ops
-    (operators/components.py; log-rounds alternating algorithm documented
-    there for 10^12-edge scale).  Oracle side: the same closure as a DuckDB
+    Spark side: the log-rounds large-star/small-star closure
+    (operators/components.py).  Oracle side: the same closure as a DuckDB
     RECURSIVE CTE over the identical planted-pair SQL — a value-level check
     of an iterative distributed algorithm.  Representative = min doc_id per
     component, i.e. the original document wins over its planted mutations.
@@ -1445,28 +1416,15 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     comp = connected_components(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    return _cluster_output(comp)
-
-
-@register("dedup_cluster_bigstar", _CLUSTER_SQL)
-def dedup_cluster_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster closure as dedup_cluster_representatives but via the
-    log-rounds alternating large-star/small-star algorithm
-    (operators/components.py connected_components_bigstar, Kiveris et al.
-    SoCC 2014) — O(log n) rounds independent of component diameter, the
-    tool for pair generators that emit long chains.
-
-    Both algorithms hash-match the SAME DuckDB RECURSIVE-CTE oracle, which
-    pins algorithm-equivalence at the value level: min-id labels must be
-    identical whichever closure computed them.
-    """
-    from moira_spark.operators.components import connected_components_bigstar
-
-    pairs = dedup_jaccard_3gram(spark, sf_dir)
-    comp = connected_components_bigstar(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    # component count approaches corpus cardinality when duplication is
+    # sparse — equi-join unhinted, AQE broadcasts when actually small
+    csize = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("n_members"))
+    return comp.join(csize, "comp").select(
+        F.col("id").alias("doc_id"),
+        F.col("comp").alias("component"),
+        (F.col("id") == F.col("comp")).alias("is_representative"),
+        "n_members",
     )
-    return _cluster_output(comp)
 
 
 @register(
@@ -1495,7 +1453,7 @@ def dedup_cluster_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end NEAR-dedup capstone in one query: shingle-join pair
     generation -> log-rounds large-star/small-star cluster closure
-    (connected_components_bigstar) -> keep exactly one representative per
+    (connected_components) -> keep exactly one representative per
     cluster (min doc_id) plus every unclustered document.
 
     This is the pass that actually shrinks a crawl: pairs alone cannot
@@ -1505,11 +1463,11 @@ def corpus_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one anti-join — and the whole composition hash-matches the DuckDB
     RECURSIVE-CTE transitive closure at the value level.
     """
-    from moira_spark.operators.components import connected_components_bigstar
+    from moira_spark.operators.components import connected_components
 
     corpus = _planted_near(spark, sf_dir)
     pairs = dedup_jaccard_3gram(spark, sf_dir)
-    comp = connected_components_bigstar(
+    comp = connected_components(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     reps = comp.filter(F.col("id") == F.col("comp")).select(
@@ -1571,18 +1529,18 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 val, 9 test); singletons are their own group.
 
     Scale shape: pair generation is the bucketed shingle join, closure is
-    the O(log n) big-star algorithm, and the assignment is one left join —
-    all shapes already proven at the dedup tier; the split adds only a
-    projection.  In-query hard-fails: (a) ZERO groups straddle a split
+    O(log n) large-star/small-star rounds, and the assignment is one left
+    join — all shapes already proven at the dedup tier; the split adds only
+    a projection.  In-query hard-fails: (a) ZERO groups straddle a split
     (computed from the assignment frame, not assumed), and (b) the planted
     near-pairs actually exercise the guarantee (>= 2 multi-member groups),
     otherwise the leakage check would pass vacuously.
     """
-    from moira_spark.operators.components import connected_components_bigstar
+    from moira_spark.operators.components import connected_components
 
     corpus = _planted_near(spark, sf_dir)
     pairs = dedup_jaccard_3gram(spark, sf_dir)
-    comp = connected_components_bigstar(
+    comp = connected_components(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     assign = (

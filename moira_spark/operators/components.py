@@ -3,31 +3,18 @@
 Near-dup pair generators (Jaccard join, MinHash/SimHash banding,
 embedding LSH) emit PAIRS; an actual dedup pass needs CLUSTERS — if A~B
 and B~C, keeping "one of each pair" would keep two of {A,B,C}.  This
-operator closes pairs into components with iterative min-label
-propagation expressed entirely in DataFrame ops:
+operator closes pairs into components, labelling each node with the min
+id it can reach, using the alternating large-star / small-star rounds of
+Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC
+2014), expressed entirely in DataFrame ops.
 
-    comp(v) <- min(comp(v), min over neighbors u of comp(u))
-
-repeated to fixpoint.  Rounds needed = graph diameter; near-dup clusters
-are dense (pair generators emit most intra-cluster edges), so 1-3 rounds
-in practice.  The driver-side loop touches only one scalar aggregate per
-round (the changed-label count) — no row data ever reaches the driver.
-
-Two algorithms behind one interface:
-
-- ``connected_components`` — min-label propagation; rounds = graph
-  diameter.  The right tool for dense near-dup clusters (pair generators
-  emit most intra-cluster edges, diameter 1-3) and each round is two
-  cheap shuffles on (id) keys.  Raises rather than silently truncating
-  when the diameter exceeds ``max_iter``.
-- ``connected_components_bigstar`` — the alternating large-star /
-  small-star rounds of Kiveris et al., "Connected Components in MapReduce
-  and Beyond" (SoCC 2014): O(log n) rounds INDEPENDENT of diameter, so a
-  pair generator that emits long chains (transitive fuzzy matches,
-  follow-your-nose entity resolution) converges where propagation would
-  need diameter rounds.  Each round is a groupBy-min plus a co-partitioned
-  join — no collect_list, so a hot node never materializes its whole
-  neighborhood in one task.
+Rounds needed are O(log n), INDEPENDENT of graph diameter, so dense
+near-dup clusters (diameter 1-3) and long chains (transitive fuzzy
+matches, follow-your-nose entity resolution) both close in a few rounds.
+Each round is a groupBy-min plus a co-partitioned join — no
+collect_list, so a hot node never materializes its whole neighborhood in
+one task.  The driver-side loop touches only one scalar aggregate per
+round (the flat-star-forest test) — no row data ever reaches the driver.
 """
 
 from __future__ import annotations
@@ -44,7 +31,7 @@ def _free_checkpoint(df: DataFrame) -> None:
     DataFrame.unpersist() is a no-op for it) and the ContextCleaner only
     frees the blocks after the Python proxy is garbage collected — an
     unbounded wait on a long iteration.  Releasing the underlying RDD keeps
-    executor storage bounded at ~2 label-table copies per loop.
+    executor storage bounded at ~2 edge-table copies per loop.
 
     The CACHED RDD is the one inside the plan's LogicalRDD leaf —
     ``queryExecution().toRdd()`` builds a NEW physical RDD on every call
@@ -61,69 +48,6 @@ def _free_checkpoint(df: DataFrame) -> None:
                 leaf.rdd().unpersist(False)
     except Exception:
         pass
-
-
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
-) -> DataFrame:
-    """(src, dst) undirected edges -> (id, comp) with comp = min id reachable.
-
-    The returned frame is localCheckpoint-ed (materialized, lineage
-    truncated); its blocks are freed by the ContextCleaner when the frame
-    is garbage collected — callers may still call .unpersist() /
-    clearCache() harmlessly, the same contract as pipeline.run_pipeline.
-
-    Raises RuntimeError if the fixpoint is not reached in ``max_iter``
-    rounds (diameter larger than expected — switch to the log-rounds
-    algorithm rather than silently truncating components).
-    """
-    sym = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    sym = sym.union(
-        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # localCheckpoint per round, not persist: each round's frame references
-    # the previous labels twice (via nmin and the join-back), so without
-    # truncating the logical plan the tree doubles per round and Catalyst
-    # re-plans an exponentially growing graph.  See the same note in
-    # connected_components_bigstar.
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for _ in range(max_iter):
-            nmin = (
-                sym.join(labels, sym["src"] == labels["id"])
-                .groupBy("dst")
-                .agg(F.min("comp").alias("nmin"))
-            )
-            new = (
-                labels.join(nmin, labels["id"] == nmin["dst"], "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))
-                    ).alias("comp"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new.join(labels.select("id", F.col("comp").alias("old")), "id")
-                .filter(F.col("comp") != F.col("old"))
-                .count()
-            )
-            _free_checkpoint(labels)  # new is materialized; old blocks done
-            labels = new
-            if changed == 0:
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    finally:
-        sym.unpersist()
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -169,11 +93,11 @@ def _is_star_forest(edges: DataFrame) -> bool:
     preserve the graph's connected components (the Kiveris et al.
     invariant), so a flat forest's stars ARE the components, rooted at
     their min id (root < every child by orientation).  Checking the
-    structure directly replaces the old consecutive-signature test, which
-    always paid one extra large+small round just to observe that nothing
-    changed — and unlike the xxhash64 checksum it cannot false-positive
-    on a collision.  One scalar aggregate (no groupBy exchange; the
-    distinct-counts partial-aggregate map-side), driver sees 3 numbers."""
+    structure directly needs no confirmation round to observe that
+    nothing changed, and cannot false-positive the way a checksum of
+    consecutive rounds could.  One scalar aggregate (no groupBy exchange;
+    the distinct-counts partial-aggregate map-side), driver sees 4
+    numbers."""
     row = (
         edges.select(
             F.explode(
@@ -203,34 +127,34 @@ def _is_star_forest(edges: DataFrame) -> bool:
     )
 
 
-def connected_components_bigstar(
+def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
 ) -> DataFrame:
     """(src, dst) undirected edges -> (id, comp), comp = min id reachable —
     in O(log n) alternating large-star/small-star rounds, independent of
     graph diameter (Kiveris et al., SoCC 2014).
 
-    Same contract as connected_components (including the caller-releases
-    persistence rule); use this when the pair generator can emit long
-    chains.  Convergence is detected STRUCTURALLY (r7.3): a high->low
-    edge set that is a flat star forest — every src exactly once, no node
-    both child and root — IS the fixpoint (star rounds preserve
-    components, so flat stars = components rooted at their min).  One
-    scalar aggregate per round reaches the driver, never row data, and
-    unlike the previous consecutive-checksum test no confirmation round
-    is needed (an already-converged input costs zero rounds).
-    ``max_iter`` is a safety net two orders above the log2 bound for any
-    realistic graph.
+    The returned frame is persisted (MEMORY_AND_DISK); callers may release
+    it with .unpersist() / clearCache(), or leave it to the ContextCleaner.
+
+    Convergence is detected STRUCTURALLY: a high->low edge set that is a
+    flat star forest — every src exactly once, no node both child and
+    root — IS the fixpoint (star rounds preserve components, so flat
+    stars = components rooted at their min).  One scalar aggregate per
+    round reaches the driver, never row data, and an already-converged
+    input costs zero rounds.  Raises RuntimeError if the fixpoint is not
+    reached in ``max_iter`` rounds rather than silently truncating
+    components; the default is a safety net two orders above the log2
+    bound for any realistic graph.
     """
-    # r7: materialize the caller's edge plan ONCE.  `nodes` is consumed only
+    # Materialize the caller's edge plan ONCE.  `nodes` is consumed only
     # by the final labels join, and deriving it straight from `edges` meant
     # the ENTIRE upstream pair-generation plan (for corpus_split_leakage,
     # the full Jaccard shingle self-join) executed a second time at the end
-    # of the closure — the single most expensive redundant pass in the
-    # repo's plans (guide §2.4: remove work outright).  One localCheckpoint
-    # of the raw projected edges feeds both `nodes` and round 0.  Its
-    # blocks must outlive the returned (lazily persisted) labels frame, so
-    # they are left to the ContextCleaner, same contract as before.
+    # of the closure.  One localCheckpoint of the raw projected edges feeds
+    # both `nodes` and round 0.  Its blocks must outlive the returned
+    # (lazily persisted) labels frame, so they are left to the
+    # ContextCleaner.
     ebase = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
@@ -246,11 +170,11 @@ def connected_components_bigstar(
     # round ~8).  localCheckpoint materializes the rows AND cuts lineage to
     # a LogicalRDD; on a real cluster with executor-loss concerns, set a
     # checkpoint dir and use reliable .checkpoint() instead — same shape.
-    # Initial edges are canonicalized high->low (r7.3) — the orientation
-    # the star rounds themselves converge to.  Edges are undirected (the
-    # large star symmetrizes, the small star re-orients), so this changes
-    # no component; it exists so the seed signature below can actually
-    # match round 1's output when the input is already star-shaped.
+    # Initial edges are canonicalized high->low — the orientation the star
+    # rounds themselves converge to.  Edges are undirected (the large star
+    # symmetrizes, the small star re-orients), so this changes no
+    # component; it lets an input that is already star-shaped pass the
+    # flat-forest test before any round runs.
     cur = (
         ebase.select(
             F.greatest("src", "dst").alias("src"),
@@ -263,7 +187,7 @@ def connected_components_bigstar(
     # The flat-forest test runs BEFORE round 1 too: pair generators whose
     # components are all simple pairs hand the loop an already-converged
     # forest, and the closure then costs one scalar aggregate, zero star
-    # rounds (the old consecutive-signature test paid a minimum of two).
+    # rounds.
     for _ in range(max_iter + 1):
         if _is_star_forest(cur):
             # Fixpoint: edges form stars (child -> root, root = component
@@ -282,5 +206,5 @@ def connected_components_bigstar(
         cur = _star_round(after_large, large=False).localCheckpoint(eager=True)
         _free_checkpoint(prev)  # cur is materialized; prev blocks done
     raise RuntimeError(
-        f"connected_components_bigstar did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {max_iter} rounds"
     )

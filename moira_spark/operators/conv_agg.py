@@ -14,9 +14,9 @@ aggregation —
            -> partial bad-turn counts, S-way fan-out of the hot key
   phase 2: groupBy(conv_id)         -> sum of S partials (tiny input)
 
-The verdict table (one row per conversation) is then joined back.  For
-bounded conv counts it is broadcast; above the threshold we fall back to a
-shuffle join on conv_id, which AQE can further skew-split.
+The verdict table (one row per conversation) is then always broadcast back
+onto the turns; there is no shuffle-join fallback, so its size is bounded
+only by executor memory.
 """
 
 from __future__ import annotations
@@ -43,17 +43,8 @@ def conversation_verdicts(turns: DataFrame, keep_col: str = "keep") -> DataFrame
     )
 
 
-def attach_conv_verdicts(
-    turns: DataFrame, verdicts: DataFrame, broadcast_verdicts: bool = True
-) -> DataFrame:
-    """Join the per-conversation verdict back onto every turn.
-
-    broadcast_verdicts=True is right whenever the verdict table fits in
-    executor memory (it is one narrow row per conversation).  At extreme
-    conversation cardinality pass False: the shuffle join keys match the
-    phase-2 aggregation's partitioning, so Spark reuses the exchange.
-    """
-    v = verdicts.select("conv_id", "conv_keep")
-    if broadcast_verdicts:
-        v = F.broadcast(v)
+def attach_conv_verdicts(turns: DataFrame, verdicts: DataFrame) -> DataFrame:
+    """Join the per-conversation verdict back onto every turn, broadcasting
+    the verdict table (one narrow row per conversation)."""
+    v = F.broadcast(verdicts.select("conv_id", "conv_keep"))
     return turns.join(v, "conv_id", "left")

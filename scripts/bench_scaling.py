@@ -494,7 +494,7 @@ turns/s at the measured per-core rate of the 2-cpu config, putting 10^12
 turns at ~{1e12/(results['pipeline'][2]/2*4000)/3600:.0f} hours of cluster
 time with zero all-to-all shuffles of the text payload.
 
-## Appendix: salting A/B (scripts/ab_salting.py)
+## Appendix: salting A/B (operators/conv_agg.py, one-off round-7 run)
 
 Plain groupBy(conv_id) vs the salted two-phase aggregation on the 1M-turn
 table whose hot conversation holds 5% of all turns (local[8], warm

@@ -119,11 +119,13 @@ def main() -> None:
         "Conventions checked per query: filters pushed to the parquet scan,\n"
         "column-pruned ReadSchema, broadcast joins for small sides, exactly\n"
         "one ArrowEvalPython node in UDF plans.  (Codegen-span counts are\nonly annotated post-execution under AQE, so 0 here just means not-yet-run.)\n\n"
-        "Iterative queries (dedup_cluster_representatives) persist each\n"
-        "round's labels; formatted explain re-prints every InMemoryRelation's\n"
+        "Iterative queries (dedup_cluster_representatives) run their closure\n"
+        "rounds while the plan is built, checkpointing each round, and persist\n"
+        "the final labels; formatted explain re-prints every InMemoryRelation's\n"
         "full child tree, so join counts in that section describe the PRINTED\n"
         "text, not execution — at runtime each cached branch is one\n"
-        "InMemoryTableScan and each propagation round is two shuffles.\n\n"
+        "InMemoryTableScan and each large-star/small-star round is a\n"
+        "groupBy-min plus a co-partitioned join.\n\n"
         + "\n".join(sections)
     )
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:

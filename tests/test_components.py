@@ -1,9 +1,9 @@
-"""Log-rounds connected components (large-star/small-star) tests.
+"""Connected components (large-star/small-star) tests.
 
-The round-2 verdict's item 7: propagation is diameter-bounded and RAISES on
-long chains; the Kiveris alternating algorithm must close the same graphs in
-O(log n) rounds.  Pinned here: agreement with propagation on random graphs,
-the long-chain fixture propagation cannot do, and star/path/cycle shapes.
+Pinned here: agreement with a union-find ground truth on random graphs and
+dense planted clusters, a long chain that closes in O(log n) rounds
+regardless of its diameter, star/path/cycle shapes, and the honest
+RuntimeError when ``max_iter`` is too small.
 """
 
 from __future__ import annotations
@@ -12,10 +12,7 @@ import random
 
 import pytest
 
-from moira_spark.operators.components import (
-    connected_components,
-    connected_components_bigstar,
-)
+from moira_spark.operators.components import connected_components
 
 
 @pytest.fixture(autouse=True)
@@ -29,9 +26,9 @@ def _tiny_shuffle(spark):
     spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _labels(spark, edges, fn, **kw):
+def _labels(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = {r.id: r.comp for r in fn(df, **kw).collect()}
+    out = {r.id: r.comp for r in connected_components(df, **kw).collect()}
     spark.catalog.clearCache()
     return out
 
@@ -54,17 +51,12 @@ def _truth(edges):
     return {x: find(x) for x in parent}
 
 
-def test_bigstar_long_chain_where_propagation_raises(spark):
-    # Path of diameter 30: propagation bounded at 8 rounds must raise
-    # (honest failure, not truncation); big-star converges in O(log n)
-    # rounds regardless of the diameter.
+def test_long_chain_closes(spark):
+    # Path of diameter 30: the star rounds converge in O(log n) rounds
+    # regardless of the diameter, well inside 8.
     chain = [(i, i + 1) for i in range(30)]
     random.Random(7).shuffle(chain)
-    df = spark.createDataFrame(chain, "src long, dst long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=8).collect()
-    spark.catalog.clearCache()
-    got = _labels(spark, chain, connected_components_bigstar)
+    got = _labels(spark, chain, max_iter=8)
     assert got == {i: 0 for i in range(31)}
 
 
@@ -76,19 +68,34 @@ def test_bigstar_matches_union_find_on_random_graphs(spark, seed):
         (rng.randrange(n), rng.randrange(n)) for _ in range(50)
     ]
     edges = [(a, b) for a, b in edges if a != b]
-    got = _labels(spark, edges, connected_components_bigstar)
+    got = _labels(spark, edges)
     assert got == _truth(edges)
 
 
-def test_bigstar_matches_propagation_on_dense_clusters(spark):
-    # The dedup shape: dense planted clusters (propagation's home turf).
+def test_dense_clusters_match_union_find(spark):
+    # The dedup shape: dense planted clusters.
     clusters = [[1, 2, 3, 4], [10, 11, 12], [20, 21]]
     edges = [
         (a, b) for c in clusters for a in c for b in c if a < b
     ]
-    prop = _labels(spark, edges, connected_components)
-    star = _labels(spark, edges, connected_components_bigstar)
-    assert prop == star == _truth(edges)
+    assert _labels(spark, edges) == _truth(edges)
+
+
+def test_chain_needs_multiple_rounds(spark):
+    """A path 1-2-3-4-5 plus a separate pair: the labels must be the
+    component min, not just the one-hop neighbor min."""
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
+    got = _labels(spark, edges)
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+
+
+def test_nonconvergence_raises(spark):
+    # The path 1-2-3 is not a flat star forest, so zero allowed rounds
+    # must raise rather than return truncated components.
+    df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=0)
+    spark.catalog.clearCache()
 
 
 def test_bigstar_star_cycle_and_selfloop(spark):
@@ -97,7 +104,7 @@ def test_bigstar_star_cycle_and_selfloop(spark):
         + [(100, 101), (101, 102), (102, 100)]  # 3-cycle
         + [(200, 200)]  # self-loop only: singleton
     )
-    got = _labels(spark, edges, connected_components_bigstar)
+    got = _labels(spark, edges)
     want = {i: 0 for i in range(8)}
     want.update({100: 100, 101: 100, 102: 100, 200: 200})
     assert got == want

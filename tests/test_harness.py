@@ -22,6 +22,7 @@ SUBSET = [
     "doc_length_rule",
     "doc_scrub_emails",
     "dedup_exact",
+    "dedup_cluster_representatives",
     "embedding_cosine_topk",
     "events_rollup",
 ]
@@ -87,33 +88,6 @@ class TestHotShingleCap:
         b = base.toPandas().sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
         c = capped.toPandas().sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
         assert b.equals(c)
-
-
-class TestConnectedComponents:
-    def test_chain_needs_multiple_rounds(self, spark):
-        """A path graph 1-2-3-4-5 has diameter 4: propagation must iterate,
-        not just take the one-hop neighbor min."""
-        from moira_spark.operators.components import connected_components
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "src bigint, dst bigint"
-        )
-        got = {
-            r.id: r.comp for r in connected_components(edges).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
-        spark.catalog.clearCache()
-
-    def test_nonconvergence_raises(self, spark):
-        from moira_spark.operators.components import connected_components
-
-        edges = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
-        try:
-            connected_components(edges, max_iter=1)
-            raise AssertionError("expected RuntimeError")
-        except RuntimeError:
-            pass
-        spark.catalog.clearCache()
 
 
 def test_shingle_set_total_over_short_docs(spark):

@@ -281,7 +281,6 @@ HINT_BUDGET = {
     "dedup_jaccard_capped": 4,
     "dedup_containment": 0,
     "corpus_near_dedup": 0,
-    "dedup_cluster_bigstar": 0,
     "dedup_cluster_representatives": 0,
     "dedup_semantic": 3,
     "dedup_semantic_kmeans": 0,
